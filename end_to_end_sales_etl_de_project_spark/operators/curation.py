@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from end_to_end_sales_etl_de_project_spark.checkpoints import scoped_checkpoint
+from end_to_end_sales_etl_de_project_spark.checkpoints import materialize
 from end_to_end_sales_etl_de_project_spark.functions.hashing import h60, h60_sql
 from end_to_end_sales_etl_de_project_spark.operators import dedup
 from end_to_end_sales_etl_de_project_spark.operators.text import (
@@ -101,8 +101,7 @@ def contamination_report(
             )
         base = sh_base
     else:
-        base = scoped_checkpoint(
-            "contamination_report.base",
+        base = materialize(
             docs.select(
                 F.col(id_col).alias("doc"),
                 corpus_split(text_col).alias("split"),
@@ -110,6 +109,7 @@ def contamination_report(
             ).select(
                 "doc", "split", shingles_from_tokens(F.col("toks"), k).alias("sh")
             ),
+            site="contamination_report.base",
         )
     test_docs = base.filter(F.col("split") == "test").select(
         "doc", F.size("sh").cast("bigint").alias("n_shingles")
@@ -426,9 +426,9 @@ def curate_corpus(
         .groupBy("th")
         .agg(F.min("doc").alias("canon_doc"))
     )
-    exact = scoped_checkpoint(
-        "curate_corpus.exact",
+    exact = materialize(
         ok.select("doc", "text", h60(F.col("text")).alias("th")).join(canon, "th"),
+        site="curate_corpus.exact",
     )
     survivors = exact.filter(F.col("doc") == F.col("canon_doc")).select("doc", "text")
     surv_shingles = None
@@ -510,8 +510,7 @@ def training_manifest(
         decisions = curate_corpus(
             docs, id_col, text_col, hashed_shingles=hashed_shingles
         )
-        kept = scoped_checkpoint(
-            "training_manifest.kept",
+        kept = materialize(
             decisions.filter(F.col("stage") == "kept")
             .select(id_col, "split")
             .join(docs.select(id_col, text_col), id_col)
@@ -521,6 +520,7 @@ def training_manifest(
                 F.col(text_col).alias("text"),
                 tokens(text_col).alias("toks"),
             ),
+            site="training_manifest.kept",
         )
     sh = kept.select(
         "doc", "split", F.explode(shingles_from_tokens(F.col("toks"), k)).alias("s")

@@ -50,15 +50,7 @@ from end_to_end_sales_etl_de_project_spark.operators.text import (
     word_shingles_sql,
 )
 
-from end_to_end_sales_etl_de_project_spark.checkpoints import (
-    eager_checkpoint,
-    free_checkpoint,
-    scoped_checkpoint,
-)
-
-# r10-era name kept for in-repo call sites; the lifecycle rules (and the
-# r15 storage-level + scope machinery) live in checkpoints.py.
-_free_local_checkpoint = free_checkpoint
+from end_to_end_sales_etl_de_project_spark.checkpoints import materialize, release
 
 
 # ---------------------------------------------------------------------------
@@ -176,7 +168,7 @@ def jaccard_pairs(
         # job serializes the DAG and recompute is cheaper (see
         # docstring) — the df-cap itself still applies either way
         if candidates is None:
-            shingles = eager_checkpoint(shingles)
+            shingles = materialize(shingles)
         kept = (
             shingles.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -188,14 +180,14 @@ def jaccard_pairs(
         pre_cap = shingles
         shingles = shingles.join(kept, "shingle")
         if candidates is None:
-            shingles = scoped_checkpoint("jaccard_pairs.capped", shingles)
+            shingles = materialize(shingles, site="jaccard_pairs.capped")
             # the capped checkpoint is materialized; the pre-cap blocks
             # have no remaining consumer (ADVICE r10 hygiene)
-            _free_local_checkpoint(pre_cap)
+            release(pre_cap)
     else:
         shingles = shingles.select("doc", h60(F.col("shingle")).alias("shingle"))
         if candidates is None:
-            shingles = scoped_checkpoint("jaccard_pairs.allpairs", shingles)
+            shingles = materialize(shingles, site="jaccard_pairs.allpairs")
     sizes = shingles.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
     if candidates is not None:
         # Intersections ONLY for candidate pairs: route each pair to its
@@ -779,7 +771,7 @@ def neardup_components(
     # Initial label = min(node, min(neighbors)): the first propagation
     # round IS one groupBy over the edges, so the loop starts one round
     # ahead (and the node inventory needs no separate distinct).
-    labels = eager_checkpoint(
+    labels = materialize(
         edges.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
         .select(F.col("src").alias("node"), "lbl")
@@ -812,7 +804,7 @@ def neardup_components(
         # any executor works. Checkpointing keeps every round's plan
         # constant-size; the materialization is work the changed-count
         # job below forces anyway.
-        stepped = eager_checkpoint(
+        stepped = materialize(
             labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
             .join(hop, F.col("lbl") == F.col("pnode"), "left")
             .select(
@@ -834,7 +826,7 @@ def neardup_components(
         # `stepped` is materialized (eager checkpoint + the collect
         # above), so the prior round's blocks are now unreachable by
         # any future plan — free them instead of waiting for GC
-        _free_local_checkpoint(prev_ckpt)
+        release(prev_ckpt)
         prev_ckpt = stepped
         labels = stepped.select("node", "lbl")
         if n_changed == 0:
@@ -989,9 +981,9 @@ def minhash_estimate_audit(
         # the candidate list is referenced TWICE (estimate join + exact
         # verify probe) — materialize once per invocation, the d19 leg
         # shape; the call-site scope frees the previous generation
-        cands = scoped_checkpoint(
-            "minhash_estimate_audit.cands",
+        cands = materialize(
             lsh_candidate_pairs(sigs, n_bands, n_hashes // n_bands, max_bucket_size),
+            site="minhash_estimate_audit.cands",
         )
         true_j = jaccard_pairs(hashed_shingles, 0.0, candidates=cands, pre_hashed=True)
     else:
@@ -1221,7 +1213,7 @@ def containment_pairs(
     else:
         hashed = shingles.select("doc", h60(F.col("shingle")).alias("shingle"))
         if max_df is not None:
-            hashed = eager_checkpoint(hashed)
+            hashed = materialize(hashed)
             kept = (
                 hashed.groupBy("shingle")
                 .agg(F.count(F.lit(1)).alias("df"))
@@ -1229,11 +1221,11 @@ def containment_pairs(
                 .select("shingle")
             )
             pre_cap = hashed
-            hashed = scoped_checkpoint(
-                "containment_pairs.capped", hashed.join(kept, "shingle")
+            hashed = materialize(
+                hashed.join(kept, "shingle"), site="containment_pairs.capped"
             )
             # capped checkpoint materialized ⇒ pre-cap blocks are dead
-            _free_local_checkpoint(pre_cap)
+            release(pre_cap)
     sizes = hashed.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
     a = hashed.alias("a")
     b = hashed.alias("b")
@@ -1760,9 +1752,9 @@ def lsh_tuning_curve(
 
     def _mk_cands(cfg: tuple[int, int]) -> DataFrame:
         nb, rpb = cfg
-        return scoped_checkpoint(
-            f"lsh_tuning_curve.cands{nb}x{rpb}",
+        return materialize(
             lsh_candidate_pairs(sigs, nb, rpb, max_bucket_size),
+            site=f"lsh_tuning_curve.cands{nb}x{rpb}",
         )
 
     with ThreadPoolExecutor(max_workers=len(configs)) as pool:
@@ -2666,7 +2658,7 @@ def dedup_tier_attribution(
     # re-paying every tier per reference at runtime). Materialize each
     # flag set ONCE per invocation (doc-id lists, bounded by |corpus|);
     # nothing is memoized across calls.
-    bloom_f = eager_checkpoint(
+    bloom_f = materialize(
         hashed_shingles.join(train_docs, "doc")
         .join(pos_sh, "shingle")
         .select("doc")
@@ -2675,7 +2667,7 @@ def dedup_tier_attribution(
     # tier 1: exact (marginal: minus the gate's holds)
     th = scoped.select(F.col(id_col).alias("doc"), h60(text_col).alias("h"))
     canon = th.groupBy("h").agg(F.min("doc").alias("c"))
-    exact_f = eager_checkpoint(
+    exact_f = materialize(
         th.join(canon, "h")
         .filter(F.col("doc") > F.col("c"))
         .select("doc")
@@ -2696,7 +2688,7 @@ def dedup_tier_attribution(
     near_all = components.filter(~F.col("is_canonical")).select(
         F.col("doc_id").alias("doc")
     )
-    near_f = eager_checkpoint(
+    near_f = materialize(
         near_all.join(bloom_f, "doc", "left_anti")
         .join(exact_f, "doc", "left_anti")
     )
@@ -2715,7 +2707,7 @@ def dedup_tier_attribution(
         .otherwise(F.col("doc_b"))
         .alias("doc")
     ).distinct()
-    cont_f = eager_checkpoint(
+    cont_f = materialize(
         contained.join(bloom_f, "doc", "left_anti")
         .join(exact_f, "doc", "left_anti")
         .join(near_f, "doc", "left_anti")
@@ -2724,14 +2716,14 @@ def dedup_tier_attribution(
     def cnt(df: DataFrame, name: str) -> DataFrame:
         return df.agg(F.count(F.lit(1)).cast("bigint").alias(name))
 
-    row = scoped_checkpoint(
-        "dedup_tier_attribution.row",
+    row = materialize(
         cnt(bloom_f, "n0")
         .crossJoin(F.broadcast(cnt(exact_f, "n1")))
         .crossJoin(F.broadcast(cnt(near_f, "n2")))
         .crossJoin(F.broadcast(cnt(cont_f, "n3"))),
         # all four legs project off this 1-row frame; materialized, the
         # counts run once instead of once per leg
+        site="dedup_tier_attribution.row",
     )
     # the 1-row count frame is materialized, so the four flag-set
     # checkpoints have no remaining consumer — free them NOW instead of
@@ -2739,7 +2731,7 @@ def dedup_tier_attribution(
     # (VERDICT r14 "What's wrong #1": these four were the never-freed
     # bulk of the d24 leak)
     for flag_set in (bloom_f, exact_f, near_f, cont_f):
-        _free_local_checkpoint(flag_set)
+        release(flag_set)
     legs = [
         row.select(
             F.lit("0_bloom_decontam").alias("tier"),
@@ -2955,13 +2947,13 @@ def cms_exact_df(hashed_shingles: DataFrame, depth: int = CMS_DEPTH) -> DataFram
     — every grid leg reads it ~5x and Spark re-derives unshared
     subtrees per read; a production audit stages it to parquet."""
     key_str = F.col("shingle").cast("string")
-    return scoped_checkpoint(
-        "cms_exact_df",
+    return materialize(
         hashed_shingles.groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .select(
             "c", *[h60_seeded(key_str, s).alias(f"h{s}") for s in range(depth)]
         ),
+        site="cms_exact_df",
     )
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from end_to_end_sales_etl_de_project_spark.checkpoints import scoped_checkpoint
+from end_to_end_sales_etl_de_project_spark.checkpoints import materialize
 
 ASSET_SCHEMA = T.StructType(
     [
@@ -643,8 +643,8 @@ def phash_neardup_pairs(
     # The returned plan reads the checkpoint, so it cannot be freed
     # here — the call-site scope frees the previous invocation's blocks
     # on re-entry (r14 leaked one generation per invocation).
-    sigs = scoped_checkpoint(
-        "phash_neardup.sigs", phash_signatures(assets, decode_stub=decode_stub)
+    sigs = materialize(
+        phash_signatures(assets, decode_stub=decode_stub), site="phash_neardup.sigs"
     )
     bands = sigs.select(
         "asset_id",

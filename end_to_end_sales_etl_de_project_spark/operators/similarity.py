@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from end_to_end_sales_etl_de_project_spark.checkpoints import scoped_checkpoint
+from end_to_end_sales_etl_de_project_spark.checkpoints import materialize
 
 DIM = 64
 SIG_BITS = 8
@@ -1612,8 +1612,7 @@ def ivf_recall_curve(
     is just a slice + candidate join + top-k; the corpus is never
     shuffled."""
     exact_pairs = exact.select("query_id", "neighbor_id")
-    cells = scoped_checkpoint(
-        "ivf_recall_curve.cells",
+    cells = materialize(
         _with_cells_np(
             with_norm(_valid_vecs(emb, dim=dim), dim=dim).select(
                 F.col("vec_id").alias("neighbor_id"),
@@ -1623,9 +1622,9 @@ def ivf_recall_curve(
             ),
             centroids,
         ).select("neighbor_id", "n_emb", "n_norm", "cid"),
+        site="ivf_recall_curve.cells",
     )
-    q_ranked = scoped_checkpoint(
-        "ivf_recall_curve.probes",
+    q_ranked = materialize(
         _with_cells_np(
             with_norm(_valid_vecs(queries, dim=dim), dim=dim).select(
                 F.col("vec_id").alias("query_id"),
@@ -1637,6 +1636,7 @@ def ivf_recall_curve(
             n_probe=max(probe_counts),
             out_col="probe_cids",
         ).select("query_id", "q_emb", "q_norm", "probe_cids"),
+        site="ivf_recall_curve.probes",
     )
     dot = _dot_col("q_emb", "n_emb", dim)
     legs = []
@@ -1968,8 +1968,8 @@ def pq_recall_audit(
     # lazy, the whole encode→ADC→shortlist→rerank chain (2 Python seams)
     # ran twice per run. Materialize the |queries|·k-row result once per
     # invocation (guide §4/§5; the call-site scope frees it on re-entry).
-    pq = scoped_checkpoint(
-        "pq_recall_audit.pq", pq_topk(emb, queries, k=k, dim=dim, books=books)
+    pq = materialize(
+        pq_topk(emb, queries, k=k, dim=dim, books=books), site="pq_recall_audit.pq"
     )
     tot = exact.agg(
         F.countDistinct("query_id").alias("n_queries"),

@@ -10,10 +10,10 @@ what you'd run against 100 TB. CSV and JDBC remain available as sources
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from end_to_end_sales_etl_de_project_spark.checkpoints import session_memo
 
 TABLES = (
     "region",
@@ -29,74 +29,9 @@ TABLES = (
 )
 
 
-
-# Resolved-relation memo — the catalog role a metastore plays: each
-# spark.read.parquet call re-lists the path and re-reads footers for
-# schema (~0.15 s of driver time, measured sf0.1), and every fresh
-# query construction re-paid it per table (a 6-table join chain spent
-# ~1 s here alone, PERF.md r9). DataFrames are immutable lazy plans, so
-# one resolved relation per (session, table path, data fingerprint)
-# serves every consumer; keyed by applicationId like the other session
-# artifacts so a stopped session's relations are never reused, and by
-# corpus_fingerprint so a mid-session rewrite of the files is never
-# served from the stale relation (its cached file listing would even
-# point at deleted part files).
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
-
-
-def corpus_fingerprint(path: str) -> int:
-    """Content-version stamp for a local table/corpus path: hash of
-    the sorted (relative path, size, mtime_ns) listing under `path`
-    (file or directory). Session memos key on this so data rewritten
-    under the same path mid-session (compaction, a new snapshot
-    landing) is never served from a stale artifact (VERDICT r10 #4).
-
-    Local filesystems only: a remote URI (s3a://...) returns a
-    constant — listing an object store per memo probe would add a
-    LIST round-trip to every query build; at that point pin snapshots
-    by versioned path (the production norm for object-store corpora)
-    instead of mtime sniffing. The walk is one getdents pass per
-    directory — microseconds for the handful of files a table dir
-    holds."""
-    try:
-        if os.path.isfile(path):
-            st = os.stat(path)
-            return hash(("", st.st_size, st.st_mtime_ns))
-        if not os.path.isdir(path):
-            return -1
-        entries = []
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            rel = os.path.relpath(root, path)
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                entries.append((os.path.join(rel, f), st.st_size, st.st_mtime_ns))
-        return hash(tuple(entries))
-    except OSError:
-        return -1
-
-
-def session_memo_key(cache: dict, spark: SparkSession, path: str, *extra) -> tuple:
-    """Build the memo key (applicationId, path, fingerprint, *extra)
-    for a session-scoped derived artifact, evicting entries that can
-    never be served again: stopped sessions (their checkpointed RDDs
-    are gone with the executors) and same-path entries whose data
-    fingerprint no longer matches (the artifact describes data that no
-    longer exists). Shared by the table catalog and every artifact
-    memo in the plans layer so the staleness rule cannot drift per
-    site."""
-    app = spark.sparkContext.applicationId
-    fp = corpus_fingerprint(path)
-    for key in [
-        k for k in cache if k[0] != app or (k[1] == path and k[2] != fp)
-    ]:
-        del cache[key]
-    return (app, path, fp, *extra)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table. Plain `spark.read.parquet` (memoized per
-    session — see ``_TABLE_MEMO``) — filters and projections applied by
+    session by ``session_memo``) — filters and projections applied by
     callers are pushed into the scan by Catalyst, so no eager work
     happens here.
 
@@ -112,16 +47,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (Spark 4 default is ANSI on) — pin NULL semantics for any session
     if spark.conf.get("spark.sql.ansi.enabled", "true") != "false":
         spark.conf.set("spark.sql.ansi.enabled", "false")
-    key = session_memo_key(_TABLE_MEMO, spark, f"{sf_dir}/{name}.parquet")
-    if key not in _TABLE_MEMO:
+    path = f"{sf_dir}/{name}.parquet"
+
+    def build() -> DataFrame:
         if name == "events":
             enable_nanos_as_long(spark)
-            _TABLE_MEMO[key] = normalize_event_ts(
-                spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            )
-        else:
-            _TABLE_MEMO[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _TABLE_MEMO[key]
+            return normalize_event_ts(spark.read.parquet(path))
+        return spark.read.parquet(path)
+
+    # the catalog role a metastore plays: each spark.read.parquet call
+    # re-lists the path and re-reads footers for schema (~0.15 s of
+    # driver time, measured sf0.1), and a 6-table join chain re-paid it
+    # per table per build (~1 s, PERF.md r9). DataFrames are immutable
+    # lazy plans, so one resolved relation per (session, path, data
+    # fingerprint) serves every consumer — the fingerprint keeps a
+    # mid-session rewrite from being served a cached file listing that
+    # points at deleted part files.
+    return session_memo(spark, path, "table", build=build)
 
 
 def enable_nanos_as_long(spark: SparkSession) -> None:

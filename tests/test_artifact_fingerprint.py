@@ -11,12 +11,13 @@ import shutil
 import duckdb
 import pytest
 
-from end_to_end_sales_etl_de_project_spark.plans import documents as doc_plans
-from end_to_end_sales_etl_de_project_spark.sources.tables import (
+from end_to_end_sales_etl_de_project_spark import checkpoints as C
+from end_to_end_sales_etl_de_project_spark.checkpoints import (
     corpus_fingerprint,
-    load_table,
-    session_memo_key,
+    session_memo,
 )
+from end_to_end_sales_etl_de_project_spark.plans import documents as doc_plans
+from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
 
 SRC = "/root/testdata/sf0.001"
 
@@ -55,15 +56,26 @@ def test_fingerprint_remote_uri_is_constant():
 
 
 def test_session_memo_evicts_stale_fingerprint(spark, mutable_sf):
-    cache: dict = {}
-    k1 = session_memo_key(cache, spark, mutable_sf)
-    cache[k1] = "artifact-v1"
-    assert session_memo_key(cache, spark, mutable_sf) == k1
-    assert cache  # unchanged data: entry survives
+    builds: list[str] = []
+
+    def build() -> str:
+        builds.append(f"artifact-v{len(builds) + 1}")
+        return builds[-1]
+
+    def entries() -> list[tuple]:
+        return [k for k in C._MEMO if k[1] == mutable_sf]
+
+    v1 = session_memo(spark, mutable_sf, "test.evict", build=build)
+    assert session_memo(spark, mutable_sf, "test.evict", build=build) is v1
+    assert builds == ["artifact-v1"]  # unchanged data: entry survives
+    (k1,) = entries()
     _shrink_documents(mutable_sf)
-    k2 = session_memo_key(cache, spark, mutable_sf)
-    assert k2 != k1
-    assert not cache  # stale entry evicted, not just shadowed
+    v2 = session_memo(spark, mutable_sf, "test.evict", build=build)
+    assert v2 == "artifact-v2"
+    # the shared memo holds only the rebuilt entry: the stale one is
+    # evicted, not just shadowed
+    (k2,) = entries()
+    assert k2 != k1 and k2[2] == corpus_fingerprint(mutable_sf)
 
 
 def test_load_table_refreshes_after_rewrite(spark, mutable_sf):
